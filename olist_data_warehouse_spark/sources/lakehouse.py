@@ -482,10 +482,15 @@ class LakeTable:
             df = df.select(
                 *[F.col(c).alias(mapping.get(c, c)) for c in df.columns]
             )
-            if partition_by:
-                # partition columns are barred from mapping, so this
-                # is always the identity on them — asserted cheaply
-                assert all(c not in mapping for c in partition_by)
+            # partition columns are barred from mapping, so this is
+            # always the identity on them — checked cheaply
+            for c in partition_by or ():
+                if c in mapping:
+                    raise ValueError(
+                        f"partition column {c!r} is column-mapped to "
+                        f"{mapping[c]!r}; partition columns must keep "
+                        "their names in the data files"
+                    )
         os.makedirs(self.data_dir, exist_ok=True)
         stage = os.path.join(self.path, f"_stage-{uuid.uuid4().hex}")
         writer = df.write.mode("errorifexists")
@@ -2714,17 +2719,12 @@ class LakeTable:
                     ),
                 ])
                 add += carried
-        else:
+        elif touched:
             # insert-only: zero files rewritten — stage ONLY the
             # anti-joined inserts; matched target rows stay in place
             remove = []
-            if touched:
-                tkeys = self._scan_live(spark, state, touched).select(
-                    *keys
-                )
-                inserted = src_df.join(tkeys, keys, "left_anti")
-            else:
-                inserted = src_df
+            tkeys = self._scan_live(spark, state, touched).select(*keys)
+            inserted = src_df.join(tkeys, keys, "left_anti")
             self._enforce_constraints(
                 state, inserted, "merge_into inserts"
             )
@@ -2732,7 +2732,14 @@ class LakeTable:
             # the staged source was scratch here — reclaim it eagerly
             for m in src_add:
                 os.unlink(os.path.join(self.path, m["path"]))
-            src_add = []
+        else:
+            # insert-only with no key matched (the reference's daily
+            # load: incremental_new_rows already anti-joined the batch):
+            # every staged source row is an insert, so the staged files
+            # ARE the commit's adds — written once, never re-staged
+            remove = []
+            self._enforce_constraints(state, src_df, "merge_into inserts")
+            add = list(src_add)
         # change-feed sides: +1 rows are the incoming files (update:
         # the staged source; keep: the anti-joined inserts), -1 rows
         # are the matched pre-images staged above (update mode only).

@@ -8,6 +8,7 @@ scan, never materialize wider than the query needs.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -122,6 +123,127 @@ def check_additive_evolution(
     return problems
 
 
+# Where Spark keeps the schema of a file it wrote; it wins over the
+# parquet types when present (ParquetFileFormat.readSchemaFromFooter).
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+# Leaf annotations footer_schema maps itself: (physical, logical) pairs
+# whose Spark type is the one pyarrow's Arrow type converts to. INT
+# annotations are checked for sign separately; TIMESTAMP and INT96 are
+# typed from the footer below. Anything else is left to Spark.
+_PLAIN_LEAVES = frozenset({
+    ("BOOLEAN", "NONE"), ("INT32", "NONE"), ("INT64", "NONE"),
+    ("FLOAT", "NONE"), ("DOUBLE", "NONE"), ("INT32", "INT"),
+    ("INT64", "INT"), ("INT32", "DATE"), ("BYTE_ARRAY", "STRING"),
+    ("INT32", "DECIMAL"), ("INT64", "DECIMAL"),
+    ("FIXED_LEN_BYTE_ARRAY", "DECIMAL"), ("BYTE_ARRAY", "DECIMAL"),
+})
+
+
+def _first_data_file(path: str) -> str | None:
+    """The file Spark infers a parquet path's schema from: the path
+    itself, or a directory's first data file in path order (hidden
+    ``_``/``.`` names skipped). ``None`` for what Spark would treat
+    differently: glob patterns, summary files, partition directories,
+    and empty or missing paths."""
+    if any(c in path for c in "*?[{\\") or not os.path.exists(path):
+        return None
+    if not os.path.isdir(path):
+        return path
+    first = None
+    for name in sorted(os.listdir(path)):
+        if name in ("_metadata", "_common_metadata"):
+            return None
+        if name.startswith(("_", ".")) or name.endswith("._COPYING_"):
+            continue
+        full = os.path.join(path, name)
+        if os.path.isdir(full):
+            return None
+        first = first or full
+    return first
+
+
+def footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema ``spark.read.parquet(path)`` would infer, built from
+    the parquet footer in this Python process: no Spark job.
+
+    Reproduces Spark's inference under the session's confs: the Spark
+    row-metadata schema wins when the file carries one; otherwise naive
+    TIMESTAMP(MILLIS/MICROS) is ``timestamp_ntz`` (under
+    ``inferTimestampNTZ``) and UTC-adjusted ones ``timestamp``,
+    TIMESTAMP(NANOS) is ``bigint`` (under ``nanosAsLong``) and INT96 is
+    ``timestamp``, checked on the physical type because pyarrow reports
+    INT96 as ``timestamp[ns]`` too. Returns ``None`` for any footer type
+    outside that set (unsigned ints, TIME, JSON, nested timestamps...)
+    so the caller lets Spark infer.
+    """
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    f = _first_data_file(path)
+    if f is None:
+        return None
+    md = pq.read_metadata(f)
+    spark_json = (md.metadata or {}).get(_SPARK_ROW_METADATA)
+    if spark_json is not None:
+        try:
+            return T.StructType.fromJson(json.loads(spark_json))
+        except (ValueError, KeyError, TypeError):
+            pass  # unparseable: Spark falls back to the parquet types too
+
+    def conf(key: str) -> bool:
+        return spark.conf.get(f"spark.sql.{key}").lower() == "true"
+
+    arrow = md.schema.to_arrow_schema()
+    top = {fld.name for fld in arrow}
+    stamped: dict[str, T.DataType] = {}
+    for i in range(md.num_columns):
+        col = md.schema.column(i)
+        logical = col.logical_type.type
+        if col.physical_type == "INT96" or logical == "TIMESTAMP":
+            if col.path not in top:
+                return None  # a timestamp nested in a struct/list/map
+            if col.physical_type == "INT96":
+                if not conf("parquet.int96AsTimestamp"):
+                    return None
+                stamped[col.path] = T.TimestampType()
+                continue
+            ts = json.loads(col.logical_type.to_json())
+            if ts["timeUnit"] == "nanoseconds":
+                if not conf("legacy.parquet.nanosAsLong"):
+                    return None
+                stamped[col.path] = T.LongType()
+            elif ts["isAdjustedToUTC"] or not conf(
+                "parquet.inferTimestampNTZ.enabled"
+            ):
+                stamped[col.path] = T.TimestampType()
+            else:
+                stamped[col.path] = T.TimestampNTZType()
+        elif (col.physical_type, logical) not in _PLAIN_LEAVES or (
+            logical == "INT"
+            and not json.loads(col.logical_type.to_json())["isSigned"]
+        ):
+            return None
+    try:
+        schema = from_arrow_schema(arrow)
+    except TypeError:  # an Arrow type pyspark does not map
+        return None
+    # every timestamp is top-level, and typed from the footer above
+    return T.StructType([
+        T.StructField(fld.name, stamped.get(fld.name, fld.dataType))
+        for fld in schema.fields
+    ])
+
+
+def scan_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema from
+    :func:`footer_schema` when it maps the footer, so planning the scan
+    runs no schema-inference job; Spark infers it otherwise."""
+    schema = footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
 def load_testdata(
     spark: SparkSession,
     sf_dir: str,
@@ -129,6 +251,11 @@ def load_testdata(
     heal=None,
 ) -> dict[str, DataFrame]:
     """Load the driver's parquet tables for ``sf_dir`` as DataFrames.
+
+    Each scan takes its schema from the file's parquet footer, read in
+    this Python process (:func:`scan_parquet`), so loading runs no
+    Spark job; a footer type outside the mapped set falls back to
+    Spark's own inference for that table.
 
     Session confs are (re)applied here, at the read boundary, because
     callers may hand us *any* SparkSession — not necessarily one built
@@ -165,7 +292,7 @@ def load_testdata(
     for name in tables or TESTDATA_TABLES:
         p = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(p):
-            df = _normalize_timestamps(spark.read.parquet(p))
+            df = _normalize_timestamps(scan_parquet(spark, p))
             if heal_set is None or name in heal_set:
                 df = _heal_partitioning(spark, df, p)
             out[name] = df

@@ -273,6 +273,45 @@ def test_merge_keep_scratch_source_files_reclaimed(spark, table):
     assert on_disk <= state_files | v0_files
 
 
+def test_merge_keep_zero_match_commits_staged_source(spark, table,
+                                                     monkeypatch):
+    # the daily-load shape: no source key is in the target, so the
+    # staged source files are committed as they are, written once
+    staged = []
+    stage = table._stage_files
+
+    def recording_stage(df, *args, **kwargs):
+        staged.append(stage(df, *args, **kwargs))
+        return staged[-1]
+
+    monkeypatch.setattr(table, "_stage_files", recording_stage)
+    src = _orders(spark, 1000, 1010).repartition(2)
+    res = table.merge_into(spark, src, ["order_id"], when_matched="keep")
+    assert res == {"version": 1, "rows_matched": 0, "rows_source": 10,
+                   "files_rewritten": 0, "files_kept": 4}
+    assert len(staged) == 1
+    commit = table._read_commit(1)
+    assert commit["add"] == staged[0] and commit["remove"] == []
+    # no orphan data files and no leftover stage directories
+    assert set(_data_files(table)) == {
+        os.path.basename(p) for p in table._state()["files"]
+    }
+    assert not [n for n in os.listdir(table.path) if n.startswith("_stage-")]
+    got = sorted(tuple(r) for r in table.read(spark).collect())
+    want = sorted(tuple(r) for r in _orders(spark, 0, 100).union(
+        _orders(spark, 1000, 1010)).collect())
+    assert got == want
+
+
+def test_stage_files_rejects_mapped_partition_column(spark, table):
+    # a raised error, not an assert: the audit survives python -O
+    with pytest.raises(ValueError, match="partition column 'status'"):
+        table._stage_files(
+            _orders(spark, 0, 5), partition_by=["status"],
+            mapping={"status": "col-1"},
+        )
+
+
 def test_write_paths_reject_type_mismatch_before_commit(spark, table):
     bad = _orders(spark, 0, 5).withColumn(
         "price", F.col("price").cast("string")
